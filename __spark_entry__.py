@@ -256,7 +256,7 @@ def q_filter_pred(spark, sf_dir):
 
 
 def q_es_routing(spark, sf_dir):
-    """Rows-only: ES murmur3 is a UDF (golden-vector unit tests cover it)."""
+    """Rows-only: DuckDB has no ES murmur3 (golden-vector unit tests cover it)."""
     o = _t(spark, sf_dir, "orders")
     return routing.with_shard(
         o.select(F.col("o_orderkey").cast("string").alias("_routing")),
@@ -5843,7 +5843,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "schema_infer": q_schema_infer,
         "mapping_synthesis": q_mapping_synthesis,
         "filter_pred": q_filter_pred,
-        # --- routing (rows-only by design: ES murmur3 UDF) ---
+        # --- routing (rows-only by design: ES murmur3 has no DuckDB twin) ---
         "es_routing": q_es_routing,
         "partition_counts": q_partition_counts,
         # --- relational: joins ---

@@ -8,25 +8,25 @@ low-byte, high-byte — and ``ESHashPartitioner.scala:15-19`` which applies
 ``MathUtils.mod``, i.e. a floor/positive mod).
 
 Spark's built-in ``hash()`` is also murmur3-x86-32 but with seed 42 over
-UTF-8 bytes, so it is NOT routing-compatible; this module provides the
-parity implementation as an Arrow-batched pandas UDF.
+UTF-8 bytes, so it is NOT routing-compatible.  ``es_hash`` builds the parity
+hash as a JVM expression instead: ``encode(key, 'UTF-16LE')`` fed to a
+``StaticInvoke`` of commons-codec ``MurmurHash3.hash32x86`` (seed 0; the
+jar ships with Spark).
 
-Scale notes: the UDF is the only Python hop in the routing path.  Each Arrow
-batch is hashed with numpy (rows grouped by byte length, then all murmur3
-rounds run as vectorized uint32 ops over an (m, L) byte matrix) — tens of
-millions of keys/s/core, far above any sink's ingest rate.  The pure-python
-``murmur3_x86_32`` stays as the reference implementation the vectorized path
-is tested against.
+Scale notes: both halves are codegen'd into the caller's whole-stage stage,
+so routing adds no Python hop and no Arrow round trip per row.  The
+pure-python ``murmur3_x86_32`` / ``es_routing_hash`` stay as the reference
+implementation the JVM expression is tested against.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import functools
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType
+from pyspark.sql.utils import get_active_spark_context
 
 _C1 = 0xCC9E2D51
 _C2 = 0x1B873593
@@ -77,87 +77,44 @@ def es_routing_hash(routing: str) -> int:
     return murmur3_x86_32(routing.encode("utf-16-le"), 0)
 
 
-def _mm3_fixed_len(mat: np.ndarray) -> np.ndarray:
-    """Vectorized murmur3_x86_32 (seed 0) over an (m, L) uint8 matrix —
-    every row is one key's byte string, all rows the same length L.
-    Returns int32 hashes.  uint32 arithmetic wraps, matching the scalar
-    implementation exactly."""
-    m, length = mat.shape
-    c1 = np.uint32(_C1)
-    c2 = np.uint32(_C2)
-    h = np.zeros(m, dtype=np.uint32)  # seed 0
-    nblocks = length >> 2
-    if nblocks:
-        blocks = mat[:, : nblocks * 4].reshape(m, nblocks, 4).astype(np.uint32)
-        ks = (
-            blocks[:, :, 0]
-            | (blocks[:, :, 1] << np.uint32(8))
-            | (blocks[:, :, 2] << np.uint32(16))
-            | (blocks[:, :, 3] << np.uint32(24))
+@functools.cache
+def _hash32x86(jvm) -> Callable[[Column], Column]:
+    """``MurmurHash3.hash32x86(bytes)`` as a Column builder.  The JVM
+    handles are resolved once per gateway: each step of a ``jvm.a.b.C``
+    path is its own py4j round trip."""
+    utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    expression, column = utils.expression, utils.column
+    to_seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq
+    as_list = jvm.java.util.List.of
+    static_invoke = jvm.org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    murmur3 = jvm.java.lang.Class.forName("org.apache.commons.codec.digest.MurmurHash3")
+    int_type = jvm.org.apache.spark.sql.types.DataTypes.IntegerType
+    no_input_types = to_seq(as_list())
+    no_function = jvm.scala.Option.empty()
+
+    def build(data: Column) -> Column:
+        invoke = static_invoke(
+            murmur3,
+            int_type,
+            "hash32x86",
+            to_seq(as_list(expression(data._jc))),
+            no_input_types,
+            True,  # propagateNull: null bytes hash to null
+            True,  # returnNullable
+            True,  # isDeterministic
+            no_function,
         )
-        for i in range(nblocks):
-            k = ks[:, i] * c1
-            k = (k << np.uint32(15)) | (k >> np.uint32(17))
-            k = k * c2
-            h ^= k
-            h = (h << np.uint32(13)) | (h >> np.uint32(19))
-            h = h * np.uint32(5) + np.uint32(0xE6546B64)
-    tail_len = length & 3
-    if tail_len:
-        k = np.zeros(m, dtype=np.uint32)
-        tail = mat[:, nblocks * 4 :].astype(np.uint32)
-        if tail_len >= 3:
-            k ^= tail[:, 2] << np.uint32(16)
-        if tail_len >= 2:
-            k ^= tail[:, 1] << np.uint32(8)
-        k ^= tail[:, 0]
-        k = k * c1
-        k = (k << np.uint32(15)) | (k >> np.uint32(17))
-        k = k * c2
-        h ^= k
-    h ^= np.uint32(length)
-    h ^= h >> np.uint32(16)
-    h = h * np.uint32(0x85EBCA6B)
-    h ^= h >> np.uint32(13)
-    h = h * np.uint32(0xC2B2AE35)
-    h ^= h >> np.uint32(16)
-    return h.astype(np.int64).astype(np.int32, casting="unsafe")
+        return Column(column(invoke))
+
+    return build
 
 
-def hash_key_batch(keys: list[str | None]) -> list[int | None]:
-    """Vectorized ES routing hash of a key batch: encode UTF-16LE, group by
-    byte length, murmur3 each group as one numpy matrix op."""
-    encoded = [None if k is None else k.encode("utf-16-le") for k in keys]
-    out: list[int | None] = [None] * len(encoded)
-    by_len: dict[int, list[int]] = {}
-    for i, b in enumerate(encoded):
-        if b is not None:
-            by_len.setdefault(len(b), []).append(i)
-    for length, idxs in by_len.items():
-        if length == 0:
-            for i in idxs:
-                out[i] = 0
-            continue
-        mat = np.frombuffer(b"".join(encoded[i] for i in idxs), dtype=np.uint8)
-        mat = mat.reshape(len(idxs), length)
-        hashes = _mm3_fixed_len(mat)
-        for j, i in enumerate(idxs):
-            out[i] = int(hashes[j])
-    return out
-
-
-def hash_key_array(keys: pd.Series) -> pd.Series:
-    """pandas-native wrapper around :func:`hash_key_batch` (nullable Int32)."""
-    vals = hash_key_batch([None if s is None else str(s) for s in keys])
-    return pd.Series(vals, index=keys.index, dtype="Int32")
-
-
-# IntegerType() (not the "int" DDL string) so the UDF can be defined without
-# an active SparkSession (string return types are parsed via the JVM).
-@pandas_udf(IntegerType())
-def es_hash(keys: pd.Series) -> pd.Series:
-    """Arrow-batched ES routing hash; null keys hash to null."""
-    return hash_key_array(keys)
+def es_hash(key: Column | str) -> Column:
+    """ES routing hash of ``key`` cast to string, as a codegen'd JVM
+    expression (signed int); null keys hash to null."""
+    c = F.col(key) if isinstance(key, str) else key
+    murmur3 = _hash32x86(get_active_spark_context()._jvm)
+    return murmur3(F.encode(c.cast("string"), "UTF-16LE"))
 
 
 def es_shard(key: Column | str, num_shards: int) -> Column:
@@ -170,7 +127,4 @@ def es_shard(key: Column | str, num_shards: int) -> Column:
     null-routed doc would fall into a ``shard=null`` bucket in the bundle
     layout instead of shard 0.
     """
-    c = F.col(key) if isinstance(key, str) else key
-    return F.coalesce(
-        F.pmod(es_hash(c.cast("string")), F.lit(num_shards)), F.lit(0)
-    ).cast("int")
+    return F.coalesce(F.pmod(es_hash(key), F.lit(num_shards)), F.lit(0)).cast("int")

@@ -162,27 +162,32 @@ def scrub_nulls(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
 
 def to_documents(
     df: DataFrame,
-    id_col: str,
+    id_col: str | None = None,
     routing_col: str | None = None,
     doc_columns: list[str] | None = None,
 ) -> DataFrame:
     """Project rows into (_id, _routing, doc) — doc is the sparse JSON body.
 
-    Routing falls back to the id column when absent (``Hive2ES.scala:58-62``);
-    the reference uses a random key when both are missing — here a uuid-free
-    deterministic fallback (the id cast) keeps reruns idempotent, which the
-    sink's create-mode dedup requires.
+    Without ``id_col`` the id is synthesized as ``md5(doc)``: a hash of the
+    full row, deterministic across reruns (unlike the reference's random
+    fallback, ``Hive2ES.scala:60-62``).  Routing falls back to the id column
+    when absent (``Hive2ES.scala:58-62``), which keeps reruns idempotent, as
+    the sink's create-mode dedup requires.
     """
-    body = doc_columns or [c for c in df.columns]
+    body = doc_columns or df.columns
+    doc = F.to_json(F.struct(*[F.col(c) for c in body]))
+    if id_col is None:
+        # serialize once, then hash the string: CollapseProject keeps the
+        # non-cheap ``doc`` in its own Project because it is read twice
+        df = df.select(*([routing_col] if routing_col else []), doc.alias("doc"))
+        doc = F.col("doc")
+        id_ = F.md5(doc)
+    else:
+        id_ = F.col(id_col).cast("string")
     routing = F.coalesce(
-        *( [F.col(routing_col).cast("string")] if routing_col else [] ),
-        F.col(id_col).cast("string"),
+        *([F.col(routing_col).cast("string")] if routing_col else []), id_
     )
-    return df.select(
-        F.col(id_col).cast("string").alias("_id"),
-        routing.alias("_routing"),
-        F.to_json(F.struct(*[F.col(c) for c in body])).alias("doc"),
-    )
+    return df.select(id_.alias("_id"), routing.alias("_routing"), doc.alias("doc"))
 
 
 def parse_json_column(

@@ -23,12 +23,15 @@ reference:
 * each shard is split across ``multiple`` partitions, so a hot shard is
   written by ``multiple`` concurrent tasks instead of one straggler.
 
-Scale notes: one wide exchange, keyed by a 4-byte int.  The reference
-shuffled serialized fastjson objects; here the shuffle happens BEFORE
-document serialization so only normalized columns cross the wire.  The
-probe-key array is a plan literal of ``N`` ints (N = shards*multiple;
-~10k for a 1000-shard index at the default multiple) — negligible plan
-size, zero per-row Python.
+Scale notes: one wide exchange, keyed by a 4-byte int.  Like the
+reference, which shuffled serialized fastjson objects, ``jobs/hive2es``
+serializes BEFORE the exchange, so the shuffle carries ``(_id, _routing,
+doc)`` with ``doc`` as a JSON string (lineitem: 79.5 MB for 696 k docs).
+Shuffling the typed columns and serializing after the exchange cut that to
+35.7 MB but did not move job wall time on a 4-core host, so the order
+stays.  The probe-key array is a plan literal of ``N`` ints (N =
+shards*multiple; ~10k for a 1000-shard index at the default multiple) —
+negligible plan size, zero per-row Python.
 """
 
 from __future__ import annotations
@@ -122,7 +125,7 @@ def repartition_for_shards(
             f"num_shards * multiple = {n} exceeds 65536 partitions; "
             "lower the partition multiple for very-high-shard indexes"
         )
-    h = F.coalesce(es_hash(F.col(routing_col).cast("string")), F.lit(0))
+    h = F.coalesce(es_hash(routing_col), F.lit(0))
     out = df.withColumn("_es_slot", F.pmod(h, F.lit(n)).cast("int"))
     # slot mod shards == es_hash mod shards (shards divides n), so the
     # shard column derived from the slot agrees with es_shard().

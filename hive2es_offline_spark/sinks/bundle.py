@@ -18,20 +18,23 @@ Layout:
 
 Scale notes: the write is ``partitionBy("shard")`` on the already
 shard-co-located DataFrame, so each task writes only its own shard dirs (no
-second shuffle).  Validation reads the manifest, not the data.  The rename
-publish is atomic on HDFS-like filesystems — identical guarantee to the
-reference.
+second shuffle).  The manifest's per-shard counts are read back from the
+staged files' parquet footers (``staged_shard_counts``) — the row counts of
+what was actually written, without a Spark job; publish then validates from
+the manifest.  The rename publish is atomic on HDFS-like filesystems —
+identical guarantee to the reference.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.mapping import index_settings_final, index_settings_for_load
 
@@ -54,17 +57,7 @@ def write_bundle(
     staging = os.path.join(root, f"{index_name}_tmp")
     renamed = docs.withColumnRenamed(shard_col, "shard")
     renamed.write.mode("overwrite").partitionBy("shard").parquet(staging)
-    spark = docs.sparkSession
-    # validation counts come from re-reading what was actually written
-    # (schema passed explicitly so an empty bundle is readable too)
-    counts = {
-        int(r["shard"]): int(r["cnt"])
-        for r in spark.read.schema(renamed.schema)
-        .parquet(staging)
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    counts = staged_shard_counts(staging)
     manifest = {
         "index": index_name,
         "num_shards": num_shards,
@@ -79,6 +72,17 @@ def write_bundle(
     with open(os.path.join(staging, "_MANIFEST.json"), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     return manifest
+
+
+def staged_shard_counts(staging: str) -> dict[int, int]:
+    """Rows per shard of a staged bundle, summed from the ``num_rows`` in
+    each ``shard=*/*.parquet`` footer.  A file without a readable footer
+    (e.g. truncated) raises instead of being counted short."""
+    counts: dict[int, int] = {}
+    for path in sorted(glob.glob(os.path.join(glob.escape(staging), "shard=*", "*.parquet"))):
+        shard = int(os.path.basename(os.path.dirname(path)).split("=", 1)[1])
+        counts[shard] = counts.get(shard, 0) + pq.read_metadata(path).num_rows
+    return counts
 
 
 def publish_bundle(

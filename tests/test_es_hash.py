@@ -50,7 +50,7 @@ def test_es_routing_vectors(routing, expected):
 
 def test_shard_assignment_matches_reference_partitioner(spark):
     """es_shard == MathUtils.mod(Murmur3HashFunction.hash(key), n) for a
-    spread of keys, computed through the actual pandas UDF path."""
+    spread of keys, computed through the JVM expression path."""
     keys = [str(i) for i in range(200)] + list(ES_VECTORS)
     df = spark.createDataFrame([(k,) for k in keys], "k string")
     got = {

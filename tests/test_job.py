@@ -63,6 +63,43 @@ def test_build_documents_generated_id_is_deterministic(spark):
     assert a == b  # md5-of-row ids: rerun-idempotent (vs reference's random)
 
 
+def test_generated_id_is_md5_of_row_json(spark, tmp_path):
+    """Synthesized ids equal ``md5(to_json(struct(all columns)))`` over the
+    normalized row, and ``md5(doc)``: reruns stay idempotent against
+    bundles published before the doc was serialized only once."""
+    import datetime
+    import hashlib
+
+    from hive2es_offline_spark.operators import document
+
+    rows = [
+        (1, "Zürich 東京 😀", datetime.date(2024, 2, 29), 0.1),
+        (2, None, datetime.date(1999, 12, 31), -1.5e300),
+        (3, "", None, None),
+        (4, "ascii", datetime.date(2000, 1, 1), 3.0),
+    ]
+    spark.createDataFrame(rows, "k int, name string, d date, x double").write.parquet(
+        str(tmp_path / "t.parquet")
+    )
+    cfg = Hive2ESConfig(table="t", index_name="t_v1", sf_dir=str(tmp_path))
+    got = build_documents(spark, cfg)[0].select("_id", "doc").collect()
+
+    src = document.scrub_nulls(
+        document.normalize_types(spark.read.parquet(str(tmp_path / "t.parquet")))
+    )
+    old = {
+        r["doc"]: r["id"]
+        for r in src.select(
+            F.to_json(F.struct(*src.columns)).alias("doc"),
+            F.md5(F.to_json(F.struct(*src.columns))).alias("id"),
+        ).collect()
+    }
+    assert len(got) == len(old) == len(rows)
+    for r in got:
+        assert r["_id"] == old[r["doc"]]
+        assert r["_id"] == hashlib.md5(r["doc"].encode("utf-8")).hexdigest()
+
+
 def test_json_source_mode(spark, tmp_path):
     rows = [(f'{{"id": {i}, "name": "n{i}", "score": {i}.5}}',) for i in range(50)]
     src = str(tmp_path / "json_src.parquet")

@@ -1,14 +1,17 @@
-"""Property-based tests (hypothesis) for the pure-python cores: hash parity,
-bulk batching invariants, field naming, mapping synthesis."""
+"""Property-based tests (hypothesis) for the pure-python cores — bulk
+batching invariants, field naming, mapping synthesis — plus JVM-vs-python
+routing-hash parity over a seeded key corpus."""
 
 import json
+import random
+import string
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hive2es_offline_spark.functions.es_hash import (
+    es_hash,
     es_routing_hash,
-    hash_key_batch,
     murmur3_x86_32,
 )
 from hive2es_offline_spark.operators.document import map_field_name, normalize_field_name
@@ -16,12 +19,35 @@ from hive2es_offline_spark.plans.mapping import synthesize_mapping
 from hive2es_offline_spark.sinks.es_bulk import iter_bulk_batches
 
 
-@settings(max_examples=200)
-@given(st.lists(st.one_of(st.none(), st.text(max_size=50)), max_size=40))
-def test_vectorized_hash_matches_scalar(keys):
-    got = hash_key_batch(keys)
-    exp = [None if k is None else es_routing_hash(k) for k in keys]
-    assert got == exp
+def _routing_key_corpus(seed: int = 7, rounds: int = 6) -> list[str | None]:
+    """Seeded keys: nulls and empty strings, then ``rounds`` keys of every
+    length 0-80 (so every ``len % 4``) from each of ASCII, accented Latin,
+    CJK, emoji (surrogate pairs in UTF-16) and all four mixed."""
+    rng = random.Random(seed)
+    alphabets = [
+        string.printable,
+        "àáâãäåçèéêëìíîïñòóôõöùúûüýÿßøæœ",
+        "".join(map(chr, range(0x4E00, 0x4E00 + 400))),
+        "".join(map(chr, range(0x1F600, 0x1F650))),
+    ]
+    alphabets.append("".join(alphabets))
+    keys: list[str | None] = [None, ""] * 20
+    for _ in range(rounds):
+        for pool in alphabets:
+            for length in range(81):
+                keys.append("".join(rng.choice(pool) for _ in range(length)))
+    return keys
+
+
+def test_jvm_hash_matches_scalar(spark):
+    """The codegen'd JVM ``es_hash`` equals the pure-python oracle on every
+    key, in one Spark job."""
+    keys = _routing_key_corpus()
+    df = spark.createDataFrame(list(enumerate(keys)), "i int, k string")
+    got = dict(df.select("i", es_hash("k").alias("h")).collect())
+    assert len(keys) >= 2000 and len(got) == len(keys)
+    for i, k in enumerate(keys):
+        assert got[i] == (None if k is None else es_routing_hash(k)), repr(k)
 
 
 @settings(max_examples=200)

@@ -1,9 +1,11 @@
 """Bundle sink: staging -> validate -> atomic publish -> alias swap; bulk
 batching thresholds; multimodal plumbing."""
 
+import glob
 import json
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,6 +43,30 @@ def test_publish_validation_rejects_empty(spark, docs, tmp_path):
     bundle.write_bundle(docs.limit(0), root, "empty_v1", 3)
     with pytest.raises(ValueError, match="failed validation"):
         bundle.publish_bundle(root, "empty_v1")
+
+
+def test_footer_counts_match_spark_groupby(spark, docs, tmp_path):
+    root = str(tmp_path)
+    m = bundle.write_bundle(docs.repartition(4), root, "idx_v1", 3)
+    staged = os.path.join(root, "idx_v1_tmp")
+    spark_counts = {
+        r["shard"]: r["count"]
+        for r in spark.read.parquet(staged).groupBy("shard").count().collect()
+    }
+    assert m["shard_counts"] == spark_counts
+    assert bundle.staged_shard_counts(staged) == spark_counts
+    assert m["doc_count"] == 100
+
+
+def test_footer_counts_raise_on_truncated_part(spark, docs, tmp_path):
+    root = str(tmp_path)
+    bundle.write_bundle(docs, root, "idx_v1", 3)
+    staged = os.path.join(root, "idx_v1_tmp")
+    part = sorted(glob.glob(os.path.join(staged, "shard=*", "*.parquet")))[0]
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    with pytest.raises(pa.ArrowInvalid):
+        bundle.staged_shard_counts(staged)
 
 
 def test_alias_swap_is_atomic_repoint(spark, docs, tmp_path):
